@@ -21,13 +21,14 @@ from functools import partial as _partial
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from .job import ensure_package_shipped
+
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # every operator with a Python UDF starts from a _read scan, and its
+    # UDF unpickles on the workers by importing this package
+    ensure_package_shipped(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-_SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
-                                       str(1024 * 1024)))
 
 
 def _spread(df: DataFrame, waves: int = 1, heavy: bool = False) -> DataFrame:
@@ -55,12 +56,13 @@ def _spread(df: DataFrame, waves: int = 1, heavy: bool = False) -> DataFrame:
 
     The lower bound is input-size-derived, not a constant (guide §2.5:
     partitioning must adapt to scale, not be tuned to one bench size):
-    below ``SPARK_GRAFT_SPREAD_MIN_BYTES`` (default 1 MiB) of estimated
-    input the re-split shuffle costs more than the parallelism it buys
-    and the scan is left alone. Interleaved on/off A/B at sf0.1 (~0.6 MB
-    documents scan): dedup_lines 2.46 vs 1.04 s, dedup_simhash 2.72 vs
-    0.95, ngram_jaccard 4.44 vs 2.01, quality_repetition 1.51 vs 0.57,
-    lm_bigram_score 2.20 vs 1.02 — spread loses everywhere at that
+    below ``SPARK_GRAFT_SPREAD_MIN_BYTES`` (default 1 MiB, read at each
+    call) of estimated input the re-split shuffle costs more than the
+    parallelism it buys and the scan is left alone; a scan whose size
+    Catalyst cannot report is spread. Interleaved on/off A/B at sf0.1
+    (~0.6 MB documents scan): dedup_lines 2.46 vs 1.04 s, dedup_simhash
+    2.72 vs 0.95, ngram_jaccard 4.44 vs 2.01, quality_repetition 1.51 vs
+    0.57, lm_bigram_score 2.20 vs 1.02 — spread loses everywhere at that
     size, while the same ops measured spread-positive at sf1.0 (~6 MB
     scan; §3 of OPTIMIZATION_r07.md). ``heavy=True`` bypasses the size
     gate for callers whose per-row work dwarfs any shuffle at every
@@ -71,9 +73,14 @@ def _spread(df: DataFrame, waves: int = 1, heavy: bool = False) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     if not heavy:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-        if size < _SPREAD_MIN_BYTES:
+        min_bytes = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
+                                       str(1024 * 1024)))
+        try:
+            size = int(df._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes())
+        except Exception:  # private JVM API, absent under Spark Connect
+            size = None  # unknown size: spread, as before the gate
+        if size is not None and size < min_bytes:
             return df
     return df.repartition(target * waves)
 

@@ -342,6 +342,9 @@ def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     Common-Crawl segments."""
     from pyspark.sql import functions as F
 
+    from .job import ensure_package_shipped
+    ensure_package_shipped(spark)
+
     def explode_warcs(batches):
         import pandas as pd
         for pdf in batches:
@@ -694,6 +697,9 @@ def read_pages_warc_indexed(spark: SparkSession, index_dir: str,
     for IO accounting; bytes_read == length proves nothing outside the
     member was touched."""
     from pyspark.sql import functions as F
+
+    from .job import ensure_package_shipped
+    ensure_package_shipped(spark)
 
     idx = spark.read.parquet(index_dir)
     if predicate is not None:

@@ -36,6 +36,7 @@ def read_pages_warc_stream(spark: SparkSession, source_dir: str,
     dedup_stream unchanged — the WARC frontier needs no staging ETL
     even in continuous ingest."""
     from .sources import _parse_warc_records
+    ensure_package_shipped(spark)
     raw = (spark.readStream.format("binaryFile")
            .schema("path string, modificationTime timestamp, "
                    "length long, content binary")

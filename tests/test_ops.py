@@ -453,3 +453,29 @@ def test_fused_sketch_kernels_match_expression_forms(spark):
     ref_se = sorted(tuple(r) for r in
                     _simhash_fold_arrow(base_se).collect())
     assert fused_se == ref_se
+
+
+def test_ops_udf_runs_from_outside_the_repo(tmp_path):
+    """An ops operator with a Python UDF ships the package itself: from a
+    driver working directory outside the repo the workers cannot import
+    it from the cwd, and its fused minhash kernel unpickles by importing
+    nreadability_spark."""
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from nreadability_spark.spark.ops import SQL_OPS\n"
+        "from nreadability_spark.spark.session import get_spark\n"
+        "spark = get_spark('ops-outside-repo', master='local[2]')\n"
+        "fn = SQL_OPS['minhash_signatures'][0]\n"
+        f"print('rows', len(fn(spark, {SF_DIR!r}).collect()))\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert int(proc.stdout.split("rows")[-1]) > 0

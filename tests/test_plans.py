@@ -624,7 +624,7 @@ def test_simhash_incremental_index_side_has_no_exchange(spark):
             depth = udepth
 
 
-def test_spread_size_gate(spark):
+def test_spread_size_gate(spark, monkeypatch):
     """_spread is input-size-adaptive (r7): a scan below
     SPARK_GRAFT_SPREAD_MIN_BYTES is left alone (the re-split shuffle
     costs more than the parallelism it buys — measured 2-3x slower at
@@ -632,6 +632,8 @@ def test_spread_size_gate(spark):
     engages, and heavy=True (per-row work dwarfs any shuffle, e.g. the
     PDF build kernel) bypasses the gate."""
     from nreadability_spark.spark import ops
+    # the default threshold, whatever the environment sets
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_BYTES", str(1024 * 1024))
     docs = ops._read(spark, SF_DIR, "documents").select("doc_id", "text")
     n_scan = docs.rdd.getNumPartitions()
     target = spark.sparkContext.defaultParallelism
@@ -640,11 +642,17 @@ def test_spread_size_gate(spark):
     assert ops._spread(docs).rdd.getNumPartitions() == n_scan
     # heavy callers bypass the size gate
     assert ops._spread(docs, heavy=True).rdd.getNumPartitions() == target
-    # above the threshold the re-split engages (waves multiply it)
-    old = ops._SPREAD_MIN_BYTES
-    ops._SPREAD_MIN_BYTES = 0
-    try:
-        assert ops._spread(docs).rdd.getNumPartitions() == target
-        assert ops._spread(docs, waves=2).rdd.getNumPartitions() == 2 * target
-    finally:
-        ops._SPREAD_MIN_BYTES = old
+
+    class NoSizeProbe:  # Catalyst's size estimate is unreachable
+        sparkSession = docs.sparkSession
+        rdd = docs.rdd
+        _jdf = None
+        repartition = docs.repartition
+
+    # an unknown size spreads (the pre-gate behaviour) instead of raising
+    assert ops._spread(NoSizeProbe()).rdd.getNumPartitions() == target
+    # above the threshold the re-split engages (waves multiply it); the
+    # threshold is read at call time, not at import
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_BYTES", "0")
+    assert ops._spread(docs).rdd.getNumPartitions() == target
+    assert ops._spread(docs, waves=2).rdd.getNumPartitions() == 2 * target

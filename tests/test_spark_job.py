@@ -257,3 +257,60 @@ def test_extract_links_row_navigational_allowlist():
                                  html))
     assert out == {"http://site.example/dir/page2.html": 2,
                    "https://other.example/x": 1}
+
+
+def test_reused_workers_skip_zip_directory_rereads(spark):
+    """Before every task a Python worker calls
+    importlib.invalidate_caches(); below CPython 3.13 that re-parses the
+    directory of every zip on the worker path (pyspark.zip, the
+    spark-core jar, py4j) unless the package's zipcache fix is in. Count
+    zipimport._read_directory calls between tasks in each worker pid
+    over 8 waves of tasks: a worker's first task here installs the
+    counter, its second may still read once per importer (no stamp
+    yet), every later one must read nothing. No timing is asserted."""
+    import sys
+    import uuid
+    if sys.version_info >= (3, 13):
+        pytest.skip("zipimporter is lazy from 3.13 on")
+    from nreadability_spark.spark.job import ensure_package_shipped
+    ensure_package_shipped(spark)
+    probe = f"_read_probe_{uuid.uuid4().hex}"
+
+    def count_reads(batches):
+        import os
+        import zipimport
+
+        import pyarrow as pa
+
+        # what unpickling any of the package's UDFs does first
+        import nreadability_spark.spark  # noqa: F401
+        state = getattr(zipimport, probe, None)
+        if state is None:  # this worker's first task here
+            state = {"task": 0, "reads": 0}
+            real = zipimport._read_directory
+
+            def counting(archive):
+                state["reads"] += 1
+                return real(archive)
+
+            zipimport._read_directory = counting
+            setattr(zipimport, probe, state)
+            reads = -1  # not counted: the counter starts now
+        else:
+            state["task"] += 1
+            reads = state["reads"]
+        state["reads"] = 0
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "task": [state["task"]],
+             "reads": [reads]})
+
+    n_tasks = spark.sparkContext.defaultParallelism * 8
+    rows = (spark.range(0, n_tasks, 1, n_tasks)
+            .mapInArrow(count_reads, "pid long, task long, reads long")
+            .collect())
+    assert len(rows) == n_tasks
+    later = [r for r in rows if r["task"] >= 2]
+    assert later, f"no worker ran three tasks: {rows}"
+    assert [r for r in later if r["reads"]] == [], rows
