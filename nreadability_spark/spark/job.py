@@ -5,7 +5,7 @@ Plan shape (SURVEY.md §2.X):
     scan -> select(url, html)            # column pruning reaches the scan
          -> [left-anti resume join]      # checkpoint/resume
          -> repartition(P, xxhash64(url))  # salted: defuses host clustering
-         -> mapInPandas(extract, SCHEMA) # Arrow batches; the only Python hop
+         -> mapInArrow(extract, SCHEMA)  # Arrow batches; the only Python hop
          -> sink (parquet/Iceberg append) + per-partition metrics rollup
 
 Design notes for 100 TB:
@@ -27,9 +27,8 @@ import sys
 import tempfile
 import time
 import zipfile
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
@@ -105,20 +104,16 @@ def demo_anchor_transformer(value: str, element) -> tuple:
 def transcode_row(url: Optional[str], html: Optional[bytes],
                   image_transformer=None, anchor_transformer=None) -> dict:
     """Extract one document; never raises (failures become rows)."""
-    from nreadability_spark.readability import transcode
     from nreadability_spark.readability.encoding import decode_html_bytes
+    from nreadability_spark.readability.transcoder import Transcoder
     t0 = time.perf_counter_ns()
     nbytes = len(html) if html is not None else 0
     try:
         text = decode_html_bytes(bytes(html)) if html is not None else ""
-        if image_transformer is None and anchor_transformer is None:
-            result = transcode(text, url or None)
-        else:
-            from nreadability_spark.readability.transcoder import Transcoder
-            t = Transcoder()
-            t.image_source_transformer = image_transformer
-            t.anchor_href_transformer = anchor_transformer
-            result = t.transcode(text, url or None)
+        t = Transcoder()
+        t.image_source_transformer = image_transformer
+        t.anchor_href_transformer = anchor_transformer
+        result = t.transcode(text, url or None)
         return {
             "url": url,
             "extracted": bool(result.content_extracted),
@@ -143,25 +138,6 @@ def transcode_row(url: Optional[str], html: Optional[bytes],
             "elapsed_us": (time.perf_counter_ns() - t0) // 1000,
         }
 
-
-def _make_pandas_extractor(out_schema, row_fn, producer=None):
-    """mapInPandas fallback with the same (schema, row_fn, producer)
-    contract as the Arrow extractor."""
-    cols = [f.name for f in out_schema.fields]
-    producer = producer or transcode_row
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sys.setrecursionlimit(40000)  # deep tag-soup nesting
-        for pdf in batches:
-            # columnar assembly (list-of-dicts -> pandas is slower)
-            data: dict[str, list] = {c: [] for c in cols}
-            for u, h in zip(pdf["url"], pdf["html"]):
-                row = row_fn(producer(u, h))
-                for c in cols:
-                    data[c].append(row[c])
-            yield pd.DataFrame(data, columns=cols)
-
-    return gen
 
 # fingerprint output: ship a hash + length instead of the rendered HTML
 # and text blobs — the serde-narrow shape for consumers that only
@@ -229,11 +205,26 @@ _extract_batches_arrow_fp = _make_arrow_extractor(FINGERPRINT_SCHEMA,
                                                   _fingerprint_of)
 _extract_batches_arrow_hooked = _make_arrow_extractor(
     OUT_SCHEMA, lambda r: r, producer=_hooked_row)
-_extract_batches = _make_pandas_extractor(OUT_SCHEMA, lambda r: r)
-_extract_batches_fp = _make_pandas_extractor(FINGERPRINT_SCHEMA,
-                                             _fingerprint_of)
-_extract_batches_hooked = _make_pandas_extractor(
-    OUT_SCHEMA, lambda r: r, producer=_hooked_row)
+
+
+def _salted(df: DataFrame, num_partitions: Optional[int]) -> DataFrame:
+    """The salted exchange in front of every per-page kernel:
+    ``num_partitions=None`` picks 4 waves per core, ``0`` keeps the
+    input's partitioning (a corpus already written through this path)."""
+    if num_partitions is None:
+        # 4 waves per core: fine enough that one slow partition (huge
+        # documents cluster) can't stretch the stage tail. The extra
+        # waves cost little now that zipcache stops a reused Python
+        # worker re-reading its zip directories before every task: on
+        # local[4] (Python 3.11, PySpark 4.1) an identity mapInArrow over
+        # 16 tasks takes 0.45-0.56 s warm, against 1.3-1.9 s before and
+        # 0.1 s for the same scan with no Python
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 4
+    if num_partitions:
+        # salt by full-url hash: pages of one host arrive clustered in
+        # input order; xxhash64(url) spreads them uniformly
+        df = df.repartition(num_partitions, F.xxhash64("url"))
+    return df
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame,
@@ -254,28 +245,12 @@ def run_extraction(spark: SparkSession, pages: DataFrame,
     df = pages.select("url", "html")  # column pruning before any exchange
     if done_urls is not None:
         df = df.join(done_urls.select("url"), "url", "left_anti")
-    if num_partitions is None:
-        # 4 waves per core: fine enough that one slow partition (huge
-        # documents cluster) can't stretch the stage tail. The extra
-        # waves cost little now that zipcache stops a reused Python
-        # worker re-reading its zip directories before every task: on
-        # local[4] (Python 3.11, PySpark 4.1) an identity mapInArrow over
-        # 16 tasks takes 0.45-0.56 s warm, against 1.3-1.9 s before and
-        # 0.1 s for the same scan with no Python
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    if num_partitions:
-        # salt by full-url hash: pages of one host arrive clustered in
-        # input order; xxhash64(url) spreads them uniformly
-        df = df.repartition(num_partitions, F.xxhash64("url"))
+    df = _salted(df, num_partitions)
     schema = FINGERPRINT_SCHEMA if output == "fingerprint" else OUT_SCHEMA
-    if hasattr(df, "mapInArrow"):
-        fn = {"fingerprint": _extract_batches_arrow_fp,
-              "hooked": _extract_batches_arrow_hooked} \
-            .get(output, _extract_batches_arrow)
-        return df.mapInArrow(fn, schema)
-    fn = {"fingerprint": _extract_batches_fp,
-          "hooked": _extract_batches_hooked}.get(output, _extract_batches)
-    return df.mapInPandas(fn, schema)
+    fn = {"fingerprint": _extract_batches_arrow_fp,
+          "hooked": _extract_batches_arrow_hooked} \
+        .get(output, _extract_batches_arrow)
+    return df.mapInArrow(fn, schema)
 
 
 LINKS_SCHEMA = StructType([
@@ -348,11 +323,7 @@ def extract_links(spark: SparkSession, pages: DataFrame,
     partitioning contract as run_extraction (salted exchange unless the
     corpus is pre-salted and num_partitions=0)."""
     ensure_package_shipped(spark)
-    df = pages.select("url", "html")
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    if num_partitions:
-        df = df.repartition(num_partitions, F.xxhash64("url"))
+    df = _salted(pages.select("url", "html"), num_partitions)
     return df.mapInArrow(_links_batches_arrow, LINKS_SCHEMA)
 
 

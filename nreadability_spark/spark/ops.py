@@ -558,73 +558,6 @@ QUALITY_SCORE_SQL = f"""
 _SIMHASH_BITS = 60
 
 
-def _simhash_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, th) with th the per-doc int64 token-hash array, computed
-    JVM-side (md5/conv — byte-identical to the oracle's hash). The
-    non-empty guard runs BEFORE the projection as a cheap regex (>=1
-    non-whitespace char <=> >=1 token, same Java \\s class as the
-    split): a `where(size(th) > 0)` AFTER the projection gets pushed
-    down with the whole transform+split substituted into the Filter,
-    re-tokenizing every row a second time."""
-    corpus = _corpus(spark, sf_dir)
-    return corpus.where(r"text rlike '\\S'").selectExpr(
-        "doc_id",
-        f"transform({_TOKENS}, t -> {_H60.format(col='t')}) as th")
-
-
-def _simhash_fold_expr(base: DataFrame) -> DataFrame:
-    """Expression-form majority fold (60 interpreted ``aggregate`` lambdas
-    per row) — kept as the A/B reference for the Arrow kernel."""
-    bit_aggs = [
-        f"aggregate(th, 0L, (acc, h) -> acc + (case when (h & {1 << b}) != 0"
-        f" then 1 else -1 end)) as b{b}"
-        for b in range(_SIMHASH_BITS)]
-    bits = base.selectExpr("doc_id", *bit_aggs)
-    sim = None
-    for b in range(_SIMHASH_BITS):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = term if sim is None else (sim + term)
-    return bits.select(F.col("doc_id").cast("long").alias("doc_id"),
-                       sim.cast("long").alias("simhash"))
-
-
-def _simhash_fold_arrow(base: DataFrame) -> DataFrame:
-    """Vectorized majority fold over Arrow batches (the
-    ``_assign_cells_arrow`` pattern): per bit b, bit is set iff
-    #\\{h: bit b of h set\\} > len/2 — identical to the expression fold's
-    ``sum(±1) > 0`` on exact int64 hashes, so the output is
-    byte-identical (A/B-locked in tests/test_ops.py). One numpy pass per
-    bit over the flattened hash buffer instead of 60 interpreted lambda
-    folds per row; still a narrow scan->project stage."""
-    import numpy as np
-    import pyarrow as pa
-
-    def fold(batches):
-        for b in batches:
-            ids = b.column("doc_id")
-            th = b.column("th")
-            off = th.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = th.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vals[off[0]:off[-1]]
-            offsets = off - off[0]
-            lens = np.diff(offsets)
-            n = len(lens)
-            sim = np.zeros(n, dtype=np.int64)
-            if flat.size:
-                # rows are non-empty by the rlike guard; reduceat is only
-                # well-defined for positive-length segments
-                assert lens.min() > 0
-                half2 = lens  # majority: 2*ones > len
-                for bit in range(_SIMHASH_BITS):
-                    ones = np.add.reduceat((flat >> bit) & 1, offsets[:-1])
-                    sim |= ((2 * ones > half2).astype(np.int64) << bit)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sim, type=pa.int64())],
-                names=["doc_id", "simhash"])
-
-    return base.mapInArrow(fold, "doc_id bigint, simhash bigint")
-
-
 def _simhash_fused_arrow(corpus: DataFrame) -> DataFrame:
     """Fused tokenize->hash->fold simhash kernel over Arrow batches:
     tokenization and the per-token md5 move from the JVM expression
@@ -686,9 +619,9 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size. r7: the JVM-side tokenize + per-token
     md5/conv/substring expression stack moved into the kernel too
     (guide §4.2) — the per-task token cache makes the hash cost
-    vocabulary-bounded instead of occurrence-bounded;
-    ``_simhash_base``+``_simhash_fold_arrow`` remain the A/B reference
-    path, byte-identical (tests/test_ops.py)."""
+    vocabulary-bounded instead of occurrence-bounded. Byte-identical to
+    the JVM expression form it replaced, which tests/test_ops.py keeps
+    as its reference."""
     corpus = _corpus(spark, sf_dir)
     base = corpus.where(r"text rlike '\\S'").selectExpr(
         "cast(doc_id as bigint) as doc_id", "text")
@@ -1022,33 +955,6 @@ _SHINGLES_DUCK = ("case when len({t}) >= 3 then list_transform(range(1, len({t})
                   "else [] end").format(t=_TOKENS_DUCK)
 
 
-def _minhash_base(spark: SparkSession, sf_dir: str,
-                  demo_dups: bool = True) -> DataFrame:
-    """(doc_id, sha) with sha the JVM-computed shingle-hash array
-    (md5/conv mod — byte-identical to the oracle's hash)."""
-    corpus = (_corpus(spark, sf_dir) if demo_dups
-              else _read(spark, sf_dir, "documents")
-              .select("doc_id", "text"))
-    # tokens are hoisted into a real column before the shingle lambda:
-    # toks[i] inside a higher-order-function lambda would otherwise
-    # re-evaluate the whole split/filter chain per element (3x per
-    # shingle — measured ~7x slower)
-    # the >=1-shingle guard (<=> >=3 tokens) runs BEFORE the projections
-    # as a cheap regex — three non-whitespace runs separated by
-    # whitespace, the same Java \s class the split uses. A
-    # `where(size(sha) > 0)` AFTER the stack gets pushed down with the
-    # whole shingle chain substituted into the Filter (7 extra split
-    # evaluations per input row)
-    return corpus.where(
-        r"text rlike '\\S+\\s+\\S+\\s+\\S'"
-    ).selectExpr("doc_id", f"{_TOKENS} as toks").selectExpr(
-        "doc_id", f"{_SHINGLES_OF_TOKS} as sh_arr"
-    ).selectExpr(
-        "cast(doc_id as bigint) as doc_id",
-        f"transform(sh_arr, s -> {_H60.format(col='s')} "
-        f"% {_SHINGLE_MOD}) as sha")
-
-
 _JAVA_WS_SPLIT = None
 
 
@@ -1057,8 +963,8 @@ def _py_tokens(text: str) -> list:
     ``filter(split(lower(trim(text)), '\\s+'), x -> x != '')``:
     * trim strips ASCII space (0x20) only — both engines' default trim;
     * lower is the Unicode default case mapping (Python str.lower ==
-      Spark/DuckDB lower for the full A/B corpus + edge-case lock in
-      tests/test_ops.py);
+      Spark lower on the test corpus and the tokenizer edge cases that
+      tests/test_ops.py compares against the expression form);
     * the split class is Java's ASCII ``\\s`` = [ \\t\\n\\x0b\\f\\r]
       (NOT Python's Unicode \\s), empties dropped like the filter.
     """
@@ -1132,55 +1038,6 @@ def _minhash_fused_arrow(corpus: DataFrame) -> DataFrame:
     return corpus.mapInArrow(fused, schema)
 
 
-def _minhash_fold_expr(base: DataFrame) -> DataFrame:
-    """Expression-form fold (16 interpreted array_min(transform) per
-    row) — kept as the A/B reference for the Arrow kernel."""
-    mins = [
-        f"cast(array_min(transform(sha, x -> (x * {2 * i + 3} + {7 * i + 1})"
-        f" % {_MINHASH_MOD})) as bigint) as m{i}"
-        for i in range(_N_MINHASH)]
-    return base.selectExpr("doc_id", *mins)
-
-
-def _minhash_fold_arrow(base: DataFrame) -> DataFrame:
-    """Vectorized minhash fold over Arrow batches: one
-    ``np.minimum.reduceat`` per permutation over the flattened
-    JVM-computed shingle-hash buffer instead of 16 interpreted lambda
-    transforms per row. Exact int64 (sha < 1000003, multiplier <= 35:
-    products stay far below 2^63), so output is byte-identical to the
-    expression fold (A/B-locked)."""
-    import numpy as np
-    import pyarrow as pa
-    coeffs = [(2 * i + 3, 7 * i + 1) for i in range(_N_MINHASH)]
-    names = ["doc_id"] + [f"m{i}" for i in range(_N_MINHASH)]
-    schema = "doc_id bigint, " + ", ".join(
-        f"m{i} bigint" for i in range(_N_MINHASH))
-
-    def fold(batches):
-        for b in batches:
-            ids = b.column("doc_id")
-            sha = b.column("sha")
-            off = sha.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = sha.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vals[off[0]:off[-1]]
-            offsets = off - off[0]
-            lens = np.diff(offsets)
-            cols = []
-            if flat.size:
-                # rows have >=1 shingle by the rlike guard
-                assert lens.min() > 0
-                for a, c in coeffs:
-                    perm = (flat * a + c) % _MINHASH_MOD
-                    cols.append(np.minimum.reduceat(perm, offsets[:-1]))
-            else:
-                cols = [np.zeros(0, dtype=np.int64)] * _N_MINHASH
-            yield pa.RecordBatch.from_arrays(
-                [ids] + [pa.array(c, type=pa.int64()) for c in cols],
-                names=names)
-
-    return base.mapInArrow(fold, schema)
-
-
 def minhash_signatures(spark: SparkSession, sf_dir: str,
                        demo_dups: bool = True) -> DataFrame:
     """MinHash as a shuffle-free array projection: hash every shingle
@@ -1196,9 +1053,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str,
     minhash consumer (~9 s of dedup_minhash_lsh's 11.5 s at sf1.0);
     the fused kernel (tokenize + cached hashlib.md5 + numpy reduceat
     fold, guide §4.2) measures ~16k docs/s/core vs ~1.8k effective.
-    ``_minhash_base``+``_minhash_fold_expr`` remain the expression-form
-    A/B reference (byte-identical, locked in tests/test_ops.py), and
-    ``_minhash_fold_arrow`` the fold-only variant.
+    Byte-identical to the expression form it replaced, which
+    tests/test_ops.py keeps as its reference.
 
     ``demo_dups=False`` reads ``documents`` as-is instead of the
     dup-injected demo corpus — the shape production callers
@@ -1206,8 +1062,9 @@ def minhash_signatures(spark: SparkSession, sf_dir: str,
     corpus = (_corpus(spark, sf_dir) if demo_dups
               else _read(spark, sf_dir, "documents")
               .select("doc_id", "text"))
-    # same >=3-token prefilter as _minhash_base (cheap JVM regex BEFORE
-    # the Python boundary: rows that cannot shingle never cross)
+    # >=3-token prefilter as a cheap JVM regex BEFORE the Python
+    # boundary (three non-whitespace runs, the same Java \s class the
+    # tokenizer splits on): rows that cannot shingle never cross
     base = corpus.where(r"text rlike '\\S+\\s+\\S+\\s+\\S'").selectExpr(
         "cast(doc_id as bigint) as doc_id", "text")
     return _minhash_fused_arrow(_spread(base))

@@ -335,30 +335,25 @@ def _iter_warc_records_indexed(data: bytes):
         pos = end
 
 
-def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Read WARC files into the pages schema (url, warc_ts, html, text,
-    lang). One Arrow batch pass per file row; the scan parallelizes
-    across files (binaryFile), which is the right grain for ~1 GB
-    Common-Crawl segments."""
+def _explode_warcs(batches):
+    """mapInPandas body: binaryFile ``content`` rows -> one
+    (url, warc_date, html) row per WARC response record."""
+    import pandas as pd
+    for pdf in batches:
+        rows = {"url": [], "warc_date": [], "html": []}
+        for blob in pdf["content"]:
+            for uri, date, html in _parse_warc_records(bytes(blob)):
+                rows["url"].append(uri)
+                rows["warc_date"].append(date)
+                rows["html"].append(html)
+        yield pd.DataFrame(rows)
+
+
+def _pages_select(pages: DataFrame, *extra) -> DataFrame:
+    """(url, warc_date string, html, ...) -> the pages schema, plus any
+    ``extra`` columns."""
     from pyspark.sql import functions as F
 
-    from .job import ensure_package_shipped
-    ensure_package_shipped(spark)
-
-    def explode_warcs(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = {"url": [], "warc_date": [], "html": []}
-            for blob in pdf["content"]:
-                for uri, date, html in _parse_warc_records(bytes(blob)):
-                    rows["url"].append(uri)
-                    rows["warc_date"].append(date)
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
-
-    raw = spark.read.format("binaryFile").load(path_glob).select("content")
-    pages = raw.mapInPandas(explode_warcs,
-                            "url string, warc_date string, html binary")
     # try_cast, not to_timestamp: under Spark 4's default ANSI mode a
     # missing or non-conforming WARC-Date (WARC 1.1 allows fractional
     # seconds) must become null, not kill the ingest job on one record.
@@ -372,7 +367,26 @@ def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
         F.expr("try_cast(warc_date as timestamp)").alias("warc_ts"),
         "html",
         F.lit("").alias("text"),
-        F.lit("").alias("lang"))
+        F.lit("").alias("lang"),
+        *extra)
+
+
+def _warc_pages(raw: DataFrame) -> DataFrame:
+    """binaryFile ``content`` frame (batch or stream) -> pages rows, one
+    Arrow batch pass per file row."""
+    return _pages_select(raw.mapInPandas(
+        _explode_warcs, "url string, warc_date string, html binary"))
+
+
+def read_pages_warc(spark: SparkSession, path_glob: str) -> DataFrame:
+    """Read WARC files into the pages schema (url, warc_ts, html, text,
+    lang). One Arrow batch pass per file row; the scan parallelizes
+    across files (binaryFile), which is the right grain for ~1 GB
+    Common-Crawl segments."""
+    from .job import ensure_package_shipped
+    ensure_package_shipped(spark)
+    return _warc_pages(
+        spark.read.format("binaryFile").load(path_glob).select("content"))
 
 # --- robots.txt gating (crawl-politeness layer) ---------------------------------
 #
@@ -696,8 +710,6 @@ def read_pages_warc_indexed(spark: SparkSession, index_dir: str,
     captures. ``with_stats`` appends (file, offset, length, bytes_read)
     for IO accounting; bytes_read == length proves nothing outside the
     member was touched."""
-    from pyspark.sql import functions as F
-
     from .job import ensure_package_shipped
     ensure_package_shipped(spark)
 
@@ -750,14 +762,8 @@ def read_pages_warc_indexed(spark: SparkSession, index_dir: str,
     pages = sel.mapInPandas(
         decode, "url string, warc_date string, html binary, "
                 "file string, offset long, length long, bytes_read long")
-    cols = [F.col("url"),
-            F.expr("try_cast(warc_date as timestamp)").alias("warc_ts"),
-            F.col("html"), F.lit("").alias("text"),
-            F.lit("").alias("lang")]
-    if with_stats:
-        cols += [F.col("file"), F.col("offset"), F.col("length"),
-                 F.col("bytes_read")]
-    return pages.select(*cols)
+    extra = ("file", "offset", "length", "bytes_read") if with_stats else ()
+    return _pages_select(pages, *extra)
 
 
 def warc_lookup(spark: SparkSession, index_dir: str, url: str) -> DataFrame:

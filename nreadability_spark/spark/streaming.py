@@ -2,7 +2,7 @@
 
 The reference is batch-per-document; the streaming lift is exactly the
 ``foreachBatch``-free form: readStream over a pages directory -> the same
-mapInPandas extraction -> writeStream sink, plus a watermarked windowed
+mapInArrow extraction -> writeStream sink, plus a watermarked windowed
 metrics stream for late data. Used with Trigger.AvailableNow for
 backfill-style runs and with default micro-batches for continuous ingest.
 """
@@ -11,8 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .job import (OUT_SCHEMA, _extract_batches, _extract_batches_arrow,
-                  ensure_package_shipped)
+from .job import OUT_SCHEMA, _extract_batches_arrow, ensure_package_shipped
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -35,7 +34,7 @@ def read_pages_warc_stream(spark: SparkSession, source_dir: str,
     source's checkpointed log. Chains into extract_stream /
     dedup_stream unchanged — the WARC frontier needs no staging ETL
     even in continuous ingest."""
-    from .sources import _parse_warc_records
+    from .sources import _warc_pages
     ensure_package_shipped(spark)
     raw = (spark.readStream.format("binaryFile")
            .schema("path string, modificationTime timestamp, "
@@ -44,39 +43,16 @@ def read_pages_warc_stream(spark: SparkSession, source_dir: str,
            .option("pathGlobFilter", "*.warc*")
            .load(source_dir)
            .select("content"))
-
-    def explode_warcs(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = {"url": [], "warc_date": [], "html": []}
-            for blob in pdf["content"]:
-                for uri, date, html in _parse_warc_records(bytes(blob)):
-                    rows["url"].append(uri)
-                    rows["warc_date"].append(date)
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
-
-    pages = raw.mapInPandas(explode_warcs,
-                            "url string, warc_date string, html binary")
-    return pages.select(
-        "url",
-        F.expr("try_cast(warc_date as timestamp)").alias("warc_ts"),
-        "html",
-        F.lit("").alias("text"),
-        F.lit("").alias("lang"))
+    return _warc_pages(raw)
 
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
     """Streaming extraction: same kernel, same output schema, same serde
-    as the batch path (mapInArrow — mapInPandas only as fallback); no
-    shuffle (stateless map), so micro-batch latency is the batch's own
-    compute."""
-    spark = pages_stream.sparkSession
-    ensure_package_shipped(spark)
-    df = pages_stream.select("url", "html")
-    if hasattr(df, "mapInArrow"):
-        return df.mapInArrow(_extract_batches_arrow, OUT_SCHEMA)
-    return df.mapInPandas(_extract_batches, OUT_SCHEMA)
+    as the batch path (mapInArrow); no shuffle (stateless map), so
+    micro-batch latency is the batch's own compute."""
+    ensure_package_shipped(pages_stream.sparkSession)
+    return pages_stream.select("url", "html").mapInArrow(
+        _extract_batches_arrow, OUT_SCHEMA)
 
 
 def run_extract_stream(spark: SparkSession, source_dir: str, out_dir: str,

@@ -11,6 +11,8 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 import duckdb  # noqa: E402
 
+import __spark_entry__ as entry  # noqa: E402
+from nreadability_spark.spark.ops import SQL_OPS  # noqa: E402
 from test_ops import normalize  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -18,12 +20,9 @@ ORACLE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "oracles", "sf0.01")
 
-KERNEL_QUERIES = ["extract_articles", "extract_fingerprints",
-                  "extract_metrics", "extract_next_pages",
-                  "extract_with_transformers",
-                  "stitch_multipage", "media_features", "media_frames",
-                  "extract_links", "pdf_extract", "warc_pages",
-                  "robots_check", "warc_index"]
+# every __spark_entry__ query that is not an SQL op checks against a kernel
+# oracle
+KERNEL_QUERIES = sorted(set(entry.queries()) - set(SQL_OPS))
 
 
 @pytest.fixture(scope="module")
@@ -35,12 +34,6 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="module")
-def entry():
-    import __spark_entry__ as e
-    return e
-
-
 def test_oracles_generated():
     for f in ("extract_full", "extract_hooked", "stitch_multipage",
               "media_features", "media_frames", "pdf_extract",
@@ -49,14 +42,14 @@ def test_oracles_generated():
             "run: python scripts/gen_oracles.py")
 
 
-def test_every_query_has_an_oracle(entry):
+def test_every_query_has_an_oracle():
     q = entry.queries()
     o = entry.oracle_sql()
     assert set(o) == set(q), (set(q) - set(o), set(o) - set(q))
 
 
 @pytest.mark.parametrize("name", KERNEL_QUERIES)
-def test_kernel_query_matches_oracle(spark, entry, name):
+def test_kernel_query_matches_oracle(spark, name):
     sdf = entry.queries()[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]

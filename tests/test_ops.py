@@ -154,6 +154,42 @@ def test_dedup_demo_dups_flag(spark):
     assert agg["max_id"] < 1_000_000
 
 
+def test_bench_harness_names_exist():
+    """bench.py is frozen: every name it imports from the package must
+    still exist, and every operator its SQL_OPS loop times must still be
+    registered (a deletion or rename would otherwise surface only when
+    the harness runs)."""
+    import ast
+    import importlib
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "bench.py")) as f:
+        tree = ast.parse(f.read())
+    imported = [(node.module, alias.name) for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom)
+                and (node.module or "").startswith("nreadability_spark")
+                for alias in node.names]
+    assert imported
+    missing = [(m, n) for m, n in imported
+               if not hasattr(importlib.import_module(m), n)]
+    assert not missing, missing
+
+    looped = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.For)
+                and isinstance(node.target, ast.Name)
+                and isinstance(node.iter, (ast.Tuple, ast.List))):
+            continue
+        var = node.target.id
+        if any(isinstance(sub, ast.Subscript)
+               and isinstance(sub.value, ast.Name)
+               and sub.value.id == "SQL_OPS"
+               and isinstance(sub.slice, ast.Name) and sub.slice.id == var
+               for sub in ast.walk(node)):
+            looped += [e.value for e in node.iter.elts]
+    assert looped
+    assert not set(looped) - set(SQL_OPS), set(looped) - set(SQL_OPS)
+
+
 def test_dedup_lines_join_modes_agree(spark):
     """The broadcast/shuffle size-gate is a strategy choice only: both
     modes must produce identical reassembled corpora."""
@@ -162,31 +198,6 @@ def test_dedup_lines_join_modes_agree(spark):
     sh = sorted(tuple(r) for r in
                 dedup_lines(spark, SF_DIR, max_broadcast_rows=0).collect())
     assert bc == sh
-
-
-def test_simhash_arrow_fold_matches_expression_fold(spark):
-    """The vectorized Arrow majority fold must be byte-identical to the
-    interpreted expression fold it replaced (same JVM-computed hash
-    array in, same 60-bit majority rule)."""
-    from nreadability_spark.spark.ops import (_simhash_base,
-                                              _simhash_fold_arrow,
-                                              _simhash_fold_expr)
-    base = _simhash_base(spark, SF_DIR)
-    arrow = sorted(tuple(r) for r in _simhash_fold_arrow(base).collect())
-    expr = sorted(tuple(r) for r in _simhash_fold_expr(base).collect())
-    assert arrow == expr
-
-
-def test_minhash_arrow_fold_matches_expression_fold(spark):
-    """The vectorized minimum.reduceat fold must be byte-identical to
-    the interpreted array_min fold it replaced."""
-    from nreadability_spark.spark.ops import (_minhash_base,
-                                              _minhash_fold_arrow,
-                                              _minhash_fold_expr)
-    base = _minhash_base(spark, SF_DIR)
-    arrow = sorted(tuple(r) for r in _minhash_fold_arrow(base).collect())
-    expr = sorted(tuple(r) for r in _minhash_fold_expr(base).collect())
-    assert arrow == expr
 
 
 def test_host_pagerank_discriminates_and_conserves(spark):
@@ -381,28 +392,80 @@ def test_simhash_incremental_append_cycle(spark):
         spark.sql(f"drop table if exists {table}_counts")
 
 
+# --- expression-form sketch references -------------------------------------
+# The JVM expression stacks that the fused simhash/minhash kernels replaced:
+# md5/conv hashes and interpreted aggregate/array_min folds, all in Spark
+# SQL. They stay here as the reference the fused kernels are locked to.
+
+def _simhash_base(corpus):
+    """(doc_id, text) -> (doc_id, th): th the per-doc int64 token-hash
+    array, for rows with at least one token."""
+    from nreadability_spark.spark.ops import _H60, _TOKENS
+    return corpus.where(r"text rlike '\\S'").selectExpr(
+        "doc_id",
+        f"transform({_TOKENS}, t -> {_H60.format(col='t')}) as th")
+
+
+def _simhash_fold_expr(base):
+    """60 interpreted ``aggregate`` majority folds per row."""
+    from pyspark.sql import functions as F
+    from nreadability_spark.spark.ops import _SIMHASH_BITS
+    bit_aggs = [
+        f"aggregate(th, 0L, (acc, h) -> acc + (case when (h & {1 << b}) != 0"
+        f" then 1 else -1 end)) as b{b}"
+        for b in range(_SIMHASH_BITS)]
+    bits = base.selectExpr("doc_id", *bit_aggs)
+    sim = None
+    for b in range(_SIMHASH_BITS):
+        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
+        sim = term if sim is None else (sim + term)
+    return bits.select(F.col("doc_id").cast("long").alias("doc_id"),
+                       sim.cast("long").alias("simhash"))
+
+
+def _minhash_base(corpus):
+    """(doc_id, text) -> (doc_id, sha): sha the shingle-hash array, for
+    rows with at least one 3-token shingle."""
+    from nreadability_spark.spark.ops import (_H60, _SHINGLE_MOD,
+                                              _SHINGLES_OF_TOKS, _TOKENS)
+    return corpus.where(
+        r"text rlike '\\S+\\s+\\S+\\s+\\S'"
+    ).selectExpr("doc_id", f"{_TOKENS} as toks").selectExpr(
+        "doc_id", f"{_SHINGLES_OF_TOKS} as sh_arr"
+    ).selectExpr(
+        "cast(doc_id as bigint) as doc_id",
+        f"transform(sh_arr, s -> {_H60.format(col='s')} "
+        f"% {_SHINGLE_MOD}) as sha")
+
+
+def _minhash_fold_expr(base):
+    """16 interpreted ``array_min(transform)`` permutations per row."""
+    from nreadability_spark.spark.ops import _MINHASH_MOD, _N_MINHASH
+    mins = [
+        f"cast(array_min(transform(sha, x -> (x * {2 * i + 3} + {7 * i + 1})"
+        f" % {_MINHASH_MOD})) as bigint) as m{i}"
+        for i in range(_N_MINHASH)]
+    return base.selectExpr("doc_id", *mins)
+
+
 def test_fused_sketch_kernels_match_expression_forms(spark):
     """r7 A/B lock: the fused Python kernels (tokenize + cached md5 +
     numpy fold) must be byte-identical to the JVM expression forms they
     replaced, over the corpus AND over tokenizer edge cases (unicode
     whitespace/case, ASCII-only \\s split class, space-only trim)."""
-    from pyspark.sql import functions as F
-    from nreadability_spark.spark.ops import (_minhash_base,
-                                              _minhash_fold_expr,
+    from nreadability_spark.spark.ops import (_corpus,
                                               _minhash_fused_arrow,
-                                              _simhash_base,
-                                              _simhash_fold_arrow,
                                               _simhash_fused_arrow,
                                               minhash_signatures, simhash)
-    fused = sorted(tuple(r) for r in
-                   minhash_signatures(spark, SF_DIR).collect())
-    expr = sorted(tuple(r) for r in _minhash_fold_expr(
-        _minhash_base(spark, SF_DIR)).collect())
-    assert fused == expr
-    fused_s = sorted(tuple(r) for r in simhash(spark, SF_DIR).collect())
-    ref_s = sorted(tuple(r) for r in _simhash_fold_arrow(
-        _simhash_base(spark, SF_DIR)).collect())
-    assert fused_s == ref_s
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    corpus = _corpus(spark, SF_DIR)
+    assert rows(minhash_signatures(spark, SF_DIR)) == rows(
+        _minhash_fold_expr(_minhash_base(corpus)))
+    assert rows(simhash(spark, SF_DIR)) == rows(
+        _simhash_fold_expr(_simhash_base(corpus)))
 
     # tokenizer edge cases: NBSP/line-sep are NOT Java \s; vertical tab
     # is; trim strips only 0x20; unicode case mapping (final sigma,
@@ -421,38 +484,14 @@ def test_fused_sketch_kernels_match_expression_forms(spark):
     ]
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(edge)], "doc_id long, text string")
-    guarded = df.where(r"text rlike '\\S+\\s+\\S+\\s+\\S'") \
-        .selectExpr("cast(doc_id as bigint) as doc_id", "text")
-    fused_e = sorted(tuple(r) for r in
-                     _minhash_fused_arrow(guarded).collect())
-    base_e = guarded.selectExpr(
-        "doc_id",
-        "filter(split(lower(trim(text)), '\\\\s+'), x -> x != '') as toks"
-    ).selectExpr(
-        "doc_id",
-        "case when size(toks) >= 3 then zip_with(zip_with("
-        "slice(toks, 1, size(toks) - 2), slice(toks, 2, size(toks) - 2),"
-        " (a, b) -> concat(a, ' ', b)), slice(toks, 3, size(toks) - 2),"
-        " (ab, c) -> concat(ab, ' ', c)) else array() end as sh_arr"
-    ).selectExpr(
-        "doc_id",
-        "transform(sh_arr, s -> cast(conv(substring(md5(s), 1, 15), 16,"
-        " 10) as bigint) % 1000003) as sha")
-    expr_e = sorted(tuple(r) for r in
-                    _minhash_fold_expr(base_e).collect())
-    assert fused_e == expr_e
-    guard_s = df.where(r"text rlike '\\S'").selectExpr(
-        "cast(doc_id as bigint) as doc_id", "text")
-    fused_se = sorted(tuple(r) for r in
-                      _simhash_fused_arrow(guard_s).collect())
-    base_se = guard_s.selectExpr(
-        "doc_id",
-        "transform(filter(split(lower(trim(text)), '\\\\s+'),"
-        " x -> x != ''), t -> cast(conv(substring(md5(t), 1, 15), 16,"
-        " 10) as bigint)) as th")
-    ref_se = sorted(tuple(r) for r in
-                    _simhash_fold_arrow(base_se).collect())
-    assert fused_se == ref_se
+    # the fused kernels receive rows behind the same guards their
+    # operators apply
+    guarded = df.where(r"text rlike '\\S+\\s+\\S+\\s+\\S'")
+    assert rows(_minhash_fused_arrow(guarded)) == rows(
+        _minhash_fold_expr(_minhash_base(df)))
+    guard_s = df.where(r"text rlike '\\S'")
+    assert rows(_simhash_fused_arrow(guard_s)) == rows(
+        _simhash_fold_expr(_simhash_base(df)))
 
 
 def test_ops_udf_runs_from_outside_the_repo(tmp_path):
